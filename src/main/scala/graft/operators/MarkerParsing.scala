@@ -1,29 +1,39 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /** Marker-parsing operators — the reference's detection-cleaning stage
-  * (file:line relative to /root/reference/vedb_gaze/marker_parsing.py).
+  * (file:line relative to the reference's vedb_gaze/marker_parsing.py).
   *
   *  - snapTimestamps (J5): float-drift repair :83-102
   *  - removeBriefDetections (W3): dedup + presence-RLE + duration gate :53-111
   *  - sizeAspect (P5): marker size/aspect derivation :148-161
   *  - removeSmallDetections (P7): size/aspect/bimodality filter :114-184
-  *  - filterAndCluster: the full A1→W3→P7→W2→A7→A3 composition
-  *    (filter_and_cluster, :470-622 driver flow)
+  *  - filterAndCluster: the full A1→J5→W3→P7→W2→A7→A3 cleaning of one
+  *    session (filter_and_cluster, :470-622 driver flow)
   *
-  * All set-level steps are one-shuffle declarative transforms; only the
-  * per-epoch DBSCAN (bounded groups) runs imperative local code.
+  * The component operators are declarative DataFrame transforms that the
+  * per-step driver queries compose. filterAndCluster does not chain them:
+  * one session's marker table is a few thousand rows, where per-job
+  * overhead dominates, so it runs the whole chain in one task of a
+  * constant-key cogroup and reproduces their Spark semantics there (see
+  * its scaladoc).
   */
 object MarkerParsing {
+
+  // the reference's fixed cleaning thresholds (marker_parsing.py:53-184)
+  private val SnapTol = 1e-8
+  private val BriefRunS = 0.6
+  private val BimodalSigmas = 2.5
+  private val MaxAspect = 1.2
 
   /** J5: timestamps within `tol` (1e-8 s) of a reference-clock timestamp
     * snap to it exactly. Bucketed range join on floor(ts/tol) (the
     * windowAgg de-thetafication), then coalesce. */
   def snapTimestamps(df: DataFrame, clock: DataFrame, tsCol: String,
-                     clockTs: String, tol: Double = 1e-8): DataFrame = {
+                     clockTs: String, tol: Double = SnapTol): DataFrame = {
     val d = df.withColumn("_b", floor(col(tsCol).cast("double") / tol).cast("long"))
     val c = clock.select(col(clockTs).cast("double").as("_ct"))
       .withColumn("_cb", floor(col("_ct") / tol).cast("long"))
@@ -46,7 +56,7 @@ object MarkerParsing {
     * RLE segment over the clock index lasts long enough. */
   def removeBriefDetections(markers: DataFrame, clock: DataFrame,
                             tsCol: String, clockTs: String,
-                            durationThreshold: Double = 0.6,
+                            durationThreshold: Double = BriefRunS,
                             keys: Seq[String] = Nil): DataFrame = {
     val deduped = snapTimestamps(
       TimeSeriesOps.dropDuplicateTimestamps(markers, tsCol, keys),
@@ -119,8 +129,8 @@ object MarkerParsing {
     * case (one global group). */
   def removeSmallDetections(df: DataFrame, sizeCol: String,
                             sizeStdThreshold: Option[Double] = None,
-                            bimodalStdThreshold: Option[Double] = Some(2.5),
-                            aspectThreshold: Option[Double] = Some(1.2),
+                            bimodalStdThreshold: Option[Double] = Some(BimodalSigmas),
+                            aspectThreshold: Option[Double] = Some(MaxAspect),
                             aspectType: String = "x/y",
                             keepLessThan: Boolean = true,
                             groupCols: Seq[String] = Nil): DataFrame = {
@@ -151,11 +161,40 @@ object MarkerParsing {
       .drop("_bimodal_keep")
   }
 
-  /** The full marker-cleaning composition (filter_and_cluster):
-    * A1 dedup + W3 brief-removal → P7 size filter → W2 epoch split
-    * (gap > epochGap, duration gates) → A7 per-epoch DBSCAN over
-    * (ts_norm + 2, x·aspect, y) features (:352-384) → A3 cluster gates.
-    * Returns marker rows + epoch + marker_cluster_index. */
+  /** The full marker-cleaning pass of one session (filter_and_cluster,
+    * :470-622). Markers and clock meet in one constant-key `cogroup`, so
+    * the whole chain runs in a single task over sorted arrays — the
+    * reference's in-process shape — and nothing is collected to the
+    * driver. In-task steps, in order:
+    *  1. A1: drop every copy of a duplicated raw timestamp;
+    *  2. J5: snap each timestamp to the smallest clock tick c with
+    *     |c − t| < 1e-8 (binary search over the sorted clock);
+    *  3. W3: presence runs over the clock, kept when longer than 0.6 s;
+    *     a row survives inside any kept run, bounds inclusive;
+    *  4. P5/P7: size and aspect, the bimodality cut
+    *     ([[LocalDbscan.bimodalCut]]), then aspect < 1.2;
+    *  5. W2: gap split (gap > `epochGap`), then the epoch-duration gate;
+    *  6. A7: per-epoch [[LocalDbscan.fit]] over (ts_norm + 2, x·aspect, y)
+    *     (:352-384), labelled epoch·100000 + label, −1 = noise;
+    *  7. A3: cluster-duration gate, then `minClusters` (fewer surviving
+    *     clusters → no rows).
+    *
+    * It reproduces the Spark semantics of the component composition
+    * [[removeBriefDetections]] → [[removeSmallDetections]] →
+    * `TimeSeriesOps.sessionize` → [[ClusterOps.dbscan]] →
+    * [[ClusterOps.clusterGate]]:
+    *  - a zero `size[1]` divides to null, so the row is dropped (the
+    *    reference's inf aspect fails the gate the same way);
+    *  - a NaN size survives the bimodality cut, a null size does not;
+    *  - doubles order and compare as in Spark SQL: NaN sorts above every
+    *    value and equals itself;
+    *  - duplicates created by snapping are kept;
+    *  - epoch and cluster duration bounds are strict.
+    * Timestamps are deduplicated after their cast to double; rows sharing
+    * a snapped timestamp enter DBSCAN in raw-timestamp order.
+    *
+    * Output: `marker_cluster_index`, the input columns (timestamp as
+    * double), `marker_size`, `marker_aspect`, `epoch`. */
   def filterAndCluster(markers: DataFrame, clock: DataFrame,
                        tsCol: String = "timestamp",
                        clockTs: String = "timestamp",
@@ -168,34 +207,140 @@ object MarkerParsing {
                        clusterDuration: (Double, Double) = (0.2, 5.0),
                        minClusters: Int = 1,
                        assumedEpochTime: Double = 90.0): DataFrame = {
-    val cleaned = removeSmallDetections(
-      removeBriefDetections(markers, clock, tsCol, clockTs), sizeCol)
-    val epoched = TimeSeriesOps.sessionDurationFilter(
-      TimeSeriesOps.sessionize(cleaned, tsCol, Nil, epochGap, "epoch"),
-      tsCol, Nil, "epoch", epochDuration._1, epochDuration._2)
-    // per-epoch normalized features (marker_parsing.py:366-378): t scaled
-    // by the CONSTANT assumed epoch time of 90 s (the reference explicitly
-    // comments out ptp so cluster spacing is consistent across epochs),
-    // offset +2; x scaled by image aspect, y raw
-    val w = Window.partitionBy(col("epoch"))
-    val t = col(tsCol).cast("double")
-    val tn = (t - min(t).over(w)) / assumedEpochTime + 2.0
-    val feat = epoched
-      .withColumn("_ft", tn)
-      .withColumn("_fx", element_at(col("norm_pos"), 1) * imageAspect)
-      .withColumn("_fy", element_at(col("norm_pos"), 2))
-    val clustered = ClusterOps.dbscan(feat, Seq("epoch"),
-      Seq("_ft", "_fx", "_fy"), tsCol, dbscanEps, dbscanMinPoints,
-      "marker_cluster_index")
-      .drop("_ft", "_fx", "_fy")
-      // labels restart at 0 per epoch (the reference clusters each epoch
-      // file separately) — make them globally unique before the gate,
-      // keeping -1 = noise
-      .withColumn("marker_cluster_index",
-        when(col("marker_cluster_index") === -1, -1L)
-          .otherwise(col("epoch") * 100000 + col("marker_cluster_index")))
-    ClusterOps.clusterGate(clustered, "marker_cluster_index", tsCol,
-      clusterDuration._1, clusterDuration._2, minClusters = minClusters)
+    val m = markers.withColumn(tsCol, col(tsCol).cast("double"))
+    val outSchema = StructType(
+      (StructField("marker_cluster_index", LongType) +: m.schema.fields.toSeq) ++
+        Seq(StructField("marker_size", DoubleType),
+          StructField("marker_aspect", DoubleType), StructField("epoch", LongType)))
+    val clean = SessionCleaner(m.schema.fieldIndex(tsCol),
+      m.schema.fieldIndex(sizeCol), m.schema.fieldIndex("norm_pos"),
+      imageAspect, epochGap, epochDuration, dbscanEps, dbscanMinPoints,
+      clusterDuration, minClusters, assumedEpochTime)
+    val sessionKey = Encoders.scalaInt
+    m.groupByKey((_: Row) => 0)(sessionKey)
+      .cogroup(clock.select(col(clockTs).cast("double"))
+        .groupByKey((_: Row) => 0)(sessionKey))(
+        (_, ms, cs) => clean(ms, cs))(Encoders.row(outSchema))
+  }
+
+  /** Spark SQL's double ordering: NaN above every value and equal to
+    * itself, -0.0 = 0.0. */
+  private def cmp(a: Double, b: Double): Int =
+    if (a == b) 0 else java.lang.Double.compare(a, b)
+
+  /** [[filterAndCluster]]'s in-task body over one session's marker rows
+    * (timestamp already double) and clock ticks. */
+  private final case class SessionCleaner(
+      tsIdx: Int, sizeIdx: Int, posIdx: Int, imageAspect: Double,
+      epochGap: Double, epochDuration: (Double, Double), eps: Double,
+      minPoints: Int, clusterDuration: (Double, Double), minClusters: Int,
+      assumedEpochTime: Double) {
+
+    /** `arr[k]` of an array column as a double; null when absent. */
+    private def elem(r: Row, idx: Int, k: Int): java.lang.Double =
+      if (r.isNullAt(idx)) null
+      else r.getSeq[Any](idx).lift(k) match {
+        case Some(v: Number) => v.doubleValue
+        case _ => null
+      }
+
+    /** Index ranges [from, until) of consecutive rows with equal keys. */
+    private def segments[K](keys: Array[K])(same: (K, K) => Boolean): IndexedSeq[(Int, Int)] =
+      keys.indices.filter(i => i == 0 || !same(keys(i - 1), keys(i)))
+        .:+(keys.length).sliding(2).collect { case Seq(a, b) => (a, b) }.toIndexedSeq
+
+    def apply(markers: Iterator[Row], clock: Iterator[Row]): Iterator[Row] = {
+      // A1 (a null timestamp never passes W3's range test, so it goes too)
+      val byRaw = markers.filterNot(_.isNullAt(tsIdx)).toArray
+        .sortWith((a, b) => cmp(a.getDouble(tsIdx), b.getDouble(tsIdx)) < 0)
+      val unique = segments(byRaw.map(_.getDouble(tsIdx)))(cmp(_, _) == 0)
+        .collect { case (a, b) if b - a == 1 => byRaw(a) }.toArray
+
+      // J5: the smallest tick within the tolerance
+      val ticks = clock.filterNot(_.isNullAt(0)).map(_.getDouble(0)).toArray
+      java.util.Arrays.sort(ticks)
+      def snap(t: Double): Double = {
+        var lo = 0; var hi = ticks.length
+        while (lo < hi) {
+          val mid = (lo + hi) >>> 1
+          if (ticks(mid) < t - SnapTol) lo = mid + 1 else hi = mid
+        }
+        while (lo < ticks.length && ticks(lo) <= t + SnapTol) {
+          if (math.abs(ticks(lo) - t) < SnapTol) return ticks(lo)
+          lo += 1
+        }
+        t
+      }
+      // stable sort: rows sharing a snapped tick stay in raw order
+      val snapped = unique.map(r => (snap(r.getDouble(tsIdx)), r))
+        .sortWith((a, b) => cmp(a._1, b._1) < 0)
+
+      // W3: a tick is present when a snapped timestamp equals it (Spark
+      // join equality: -0.0 = 0.0, NaN = NaN)
+      def norm(x: Double) = if (x == 0.0) 0.0 else x
+      val present = snapped.map(p => norm(p._1))
+      java.util.Arrays.sort(present)
+      val on = ticks.map(c => java.util.Arrays.binarySearch(present, norm(c)) >= 0)
+      val runs = segments(on)(_ == _).collect {
+        case (a, b) if on(a) && cmp(ticks(b - 1) - ticks(a), BriefRunS) > 0 =>
+          (ticks(a), ticks(b - 1))
+      }
+      var r = 0
+      val brief = snapped.filter { case (t, _) =>
+        while (r < runs.length && cmp(runs(r)._2, t) < 0) r += 1
+        r < runs.length && cmp(runs(r)._1, t) <= 0
+      }
+
+      // P5/P7: size and aspect; the bimodality cut over every size
+      val sized = brief.map { case (t, row) =>
+        val sx = elem(row, sizeIdx, 0); val sy = elem(row, sizeIdx, 1)
+        if (sx == null || sy == null) (t, row, null, null)
+        else (t, row, Double.box((sx + sy) / 2.0),
+          if (sy == 0.0) null else Double.box(sx / sy))
+      }
+      val cut = LocalDbscan.bimodalCut(sized.collect {
+        case (_, _, s, _) if s != null && !s.isNaN => s.doubleValue
+      }, BimodalSigmas)
+      val kept = sized.filter { case (_, _, s, a) =>
+        cut.forall(c => s != null && (s.isNaN || s >= c)) &&
+          a != null && a < MaxAspect
+      }
+
+      // W2: gap split, strict epoch-duration gate
+      val ts = kept.map(_._1)
+      val epochOf = ts.indices.scanLeft(-1L) { (e, i) =>
+        if (i == 0 || cmp(ts(i) - ts(i - 1), epochGap) > 0) e + 1 else e
+      }.tail.toArray
+      val epochs = segments(epochOf)(_ == _).filter { case (a, b) =>
+        val d = ts(b - 1) - ts(a)
+        cmp(d, epochDuration._1) > 0 && cmp(d, epochDuration._2) < 0
+      }
+
+      // A7: per-epoch DBSCAN, labels made unique across epochs
+      val label = Array.fill(ts.length)(-1L)
+      for ((a, b) <- epochs) {
+        val feats = (a until b).map { i =>
+          val row = kept(i)._2
+          def pos(k: Int) = Option(elem(row, posIdx, k)).fold(Double.NaN)(_.doubleValue)
+          Array((ts(i) - ts(a)) / assumedEpochTime + 2.0, pos(0) * imageAspect, pos(1))
+        }.toArray
+        LocalDbscan.fit(feats, eps, minPoints).zipWithIndex.foreach { case (l, j) =>
+          if (l != -1) label(a + j) = epochOf(a) * 100000 + l
+        }
+      }
+
+      // A3: strict cluster-duration gate, then minClusters
+      val members = epochs.flatMap { case (a, b) => a until b }.filter(label(_) != -1)
+      val clusters = members.groupBy(label(_)).filter { case (_, is) =>
+        val d = ts(is.last) - ts(is.head)
+        cmp(d, clusterDuration._1) > 0 && cmp(d, clusterDuration._2) < 0
+      }.keySet
+      if (clusters.size < minClusters) Iterator.empty
+      else members.iterator.filter(i => clusters(label(i))).map { i =>
+        val (t, row, s, a) = kept(i)
+        Row.fromSeq((label(i) +: row.toSeq.updated(tsIdx, t)) ++ Seq(s, a, epochOf(i)))
+      }
+    }
   }
 
   /** [[filterAndCluster]] for CHECKERBOARD detections

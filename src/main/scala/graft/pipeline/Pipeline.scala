@@ -2,6 +2,8 @@ package graft.pipeline
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver-side pipeline orchestrator — the Spark restatement of the
@@ -103,7 +105,9 @@ object Pipeline {
               StageResult(stage.name, Failed, path, 0, Some("empty result"))
             } else StageResult(stage.name, Computed, path, n, None)
           } catch {
-            case e: Throwable =>
+            // fatal errors (OOM, interrupts) propagate: a _FAILED sentinel
+            // is permanent, and a later run on this root must recompute
+            case NonFatal(e) =>
               Files.createDirectories(Paths.get(path))
               if (!Files.exists(failed)) Files.createFile(failed)
               // getMessage can be null (bare RuntimeException, errors)

@@ -1,7 +1,18 @@
 package graft.operators
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.util.Random
+
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 class MarkerParsingSpec extends SparkSpec {
   import spark.implicits._
@@ -167,5 +178,237 @@ class MarkerParsingSpec extends SparkSpec {
     val clustersPerEpoch = out.groupBy("epoch")
       .agg(countDistinct("marker_cluster_index").as("n")).collect()
     clustersPerEpoch.foreach(r => assert(r.getAs[Long]("n") >= 2))
+  }
+
+  // ---- filterAndCluster kernel vs the component-operator composition ----
+
+  /** The composition filterAndCluster ran as before its one-task kernel,
+    * rebuilt from the component operators (default thresholds). */
+  private def chained(markers: DataFrame, clock: DataFrame,
+                      epochDuration: (Double, Double) = (30.0, 150.0),
+                      clusterDuration: (Double, Double) = (0.2, 5.0),
+                      minClusters: Int = 1): DataFrame = {
+    val ts = "timestamp"
+    val cleaned = MarkerParsing.removeSmallDetections(
+      MarkerParsing.removeBriefDetections(markers, clock, ts, ts), "size")
+    val epoched = TimeSeriesOps.sessionDurationFilter(
+      TimeSeriesOps.sessionize(cleaned, ts, Nil, 15.0, "epoch"),
+      ts, Nil, "epoch", epochDuration._1, epochDuration._2)
+    val w = Window.partitionBy(col("epoch"))
+    val t = col(ts).cast("double")
+    val feat = epoched
+      .withColumn("_ft", (t - min(t).over(w)) / 90.0 + 2.0)
+      .withColumn("_fx", element_at(col("norm_pos"), 1) * (4.0 / 3.0))
+      .withColumn("_fy", element_at(col("norm_pos"), 2))
+    val clustered = ClusterOps.dbscan(feat, Seq("epoch"),
+      Seq("_ft", "_fx", "_fy"), ts, 0.05, 5, "marker_cluster_index")
+      .drop("_ft", "_fx", "_fy")
+      .withColumn("marker_cluster_index",
+        when(col("marker_cluster_index") === -1, -1L)
+          .otherwise(col("epoch") * 100000 + col("marker_cluster_index")))
+    ClusterOps.clusterGate(clustered, "marker_cluster_index", ts,
+      clusterDuration._1, clusterDuration._2, minClusters = minClusters)
+  }
+
+  private val markerSchema = StructType(Seq(
+    StructField("timestamp", DoubleType),
+    StructField("norm_pos", ArrayType(DoubleType)),
+    StructField("size", ArrayType(DoubleType))))
+
+  private def frame(rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), markerSchema)
+
+  private def clockOf(ticks: Seq[Double]): DataFrame = ticks.toDF("timestamp")
+
+  /** A value with doubles as their bit patterns (NaN canonical). */
+  private def bits(v: Any): String = v match {
+    case null => "null"
+    case d: Double => "d" + java.lang.Double.doubleToLongBits(d).toHexString
+    case r: Row => r.toSeq.map(bits).mkString("(", ",", ")")
+    case xs: scala.collection.Seq[_] => xs.map(bits).mkString("[", ",", "]")
+    case x => x.toString
+  }
+
+  /** filterAndCluster equals the chained composition on the full row set,
+    * doubles bitwise; returns the row count. An empty composition result
+    * carries its pre-join column order, so empty frames compare fields. */
+  private def assertEquivalent(markers: DataFrame, clock: DataFrame,
+                               epochDuration: (Double, Double) = (30.0, 150.0),
+                               clusterDuration: (Double, Double) = (0.2, 5.0),
+                               minClusters: Int = 1,
+                               ansi: Boolean = true): Int = {
+    val got = MarkerParsing.filterAndCluster(markers, clock,
+      epochDuration = epochDuration, clusterDuration = clusterDuration,
+      minClusters = minClusters)
+    val key = "spark.sql.ansi.enabled"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, ansi.toString)
+    val (want, wantRows) = try {
+      val w = chained(markers, clock, epochDuration, clusterDuration, minClusters)
+      (w, w.collect().map(bits).sorted.toSeq)
+    } finally {
+      spark.conf.set(key, prev)
+      graft.CacheRegistry.releaseAll()
+    }
+    val gotRows = got.collect().map(bits).sorted.toSeq
+    if (wantRows.nonEmpty) assert(got.schema == want.schema)
+    else assert(got.schema.fields.toSet == want.schema.fields.toSet)
+    assert(got.columns.head == "marker_cluster_index")
+    assert(gotRows == wantRows)
+    gotRows.length
+  }
+
+  private val hz = 32.0 // 1/32 s ticks: exact in binary
+
+  /** A planted session on a 32 Hz clock: `epochs` epochs 100 s apart,
+    * each with four 2.5-s fixations 10 s apart at random positions. */
+  private def session(rng: Random, epochs: Int = 2): (Seq[Row], Seq[Double]) = {
+    val ticks = (0 until (epochs * 100 * hz).toInt).map(_ / hz)
+    val rows = for {
+      e <- 0 until epochs; c <- 0 until 4
+      x = 0.1 + 0.8 * rng.nextDouble(); y = 0.1 + 0.8 * rng.nextDouble()
+      f <- 0 until (2.5 * hz).toInt
+    } yield Row(ticks(((e * 100 + c * 10) * hz).toInt + f),
+      Seq(x + rng.nextGaussian() * 5e-4, y + rng.nextGaussian() * 5e-4),
+      Seq(0.05 + rng.nextGaussian() * 1e-4, 0.05 + rng.nextGaussian() * 1e-4))
+    (rows, ticks)
+  }
+
+  private def withSize(r: Row, size: Seq[Any]): Row = Row(r.get(0), r.get(1), size)
+
+  test("kernel == composition: empty markers, empty clock") {
+    val (rows, ticks) = session(new Random(1))
+    assert(assertEquivalent(frame(Nil), clockOf(ticks)) == 0)
+    assert(assertEquivalent(frame(rows), clockOf(Nil)) == 0)
+    assert(assertEquivalent(frame(Nil), clockOf(Nil)) == 0)
+  }
+
+  test("kernel == composition: all-duplicate timestamps") {
+    val (rows, ticks) = session(new Random(2))
+    assert(assertEquivalent(frame(rows ++ rows), clockOf(ticks)) == 0)
+  }
+
+  test("kernel == composition: two raw timestamps snapping onto one tick") {
+    val (rows, ticks) = session(new Random(3))
+    // every 7th row gets a drifted twin: both snap to the same tick
+    val twins = rows.zipWithIndex.collect { case (r, i) if i % 7 == 0 =>
+      Row(r.getDouble(0) + 4e-9, r.get(1), r.get(2)) }
+    val n = assertEquivalent(frame(rows ++ twins), clockOf(ticks))
+    assert(n == rows.length + twins.length)
+  }
+
+  test("kernel == composition: zero, NaN and null sizes") {
+    val (rows, ticks) = session(new Random(4))
+    val odd = rows.zipWithIndex.map { case (r, i) => i % 11 match {
+      case 0 => withSize(r, Seq(0.05, 0.0))
+      case 1 => withSize(r, Seq(Double.NaN, 0.05))
+      case 2 => withSize(r, null)
+      case 3 => withSize(r, Seq(0.05, null))
+      case _ => r
+    }}
+    // the composition's x/0 is null only with ANSI off (it raises otherwise)
+    val n = assertEquivalent(frame(odd), clockOf(ticks), ansi = false)
+    assert(n > 0 && n <= rows.length - 4 * rows.length / 11)
+  }
+
+  test("kernel == composition: bimodal sizes keep the larger mode") {
+    val (rows, ticks) = session(new Random(5))
+    val small = rows.zipWithIndex.map { case (r, i) =>
+      if (i % 3 == 0) withSize(r, Seq(0.02, 0.02)) else r }
+    val n = assertEquivalent(frame(small), clockOf(ticks))
+    assert(n > 0 && n < rows.length)
+  }
+
+  test("kernel == composition: epoch and cluster durations exactly on a bound") {
+    val (rows, ticks) = session(new Random(6))
+    // each epoch spans exactly 32.5 − 1/32 s, each fixation 79/32 s; the
+    // bounds are strict, so a duration equal to either bound drops
+    val epochSpan = 32.5 - 1 / hz
+    val fixation = 79 / hz
+    def n(epochDuration: (Double, Double) = (30.0, 150.0),
+          clusterDuration: (Double, Double) = (0.2, 5.0)) =
+      assertEquivalent(frame(rows), clockOf(ticks), epochDuration, clusterDuration)
+    assert(n(epochDuration = (epochSpan - 1 / hz, 150.0)) == rows.length)
+    assert(n(epochDuration = (epochSpan, 150.0)) == 0)
+    assert(n(epochDuration = (0.0, epochSpan)) == 0)
+    assert(n(clusterDuration = (fixation - 1 / hz, 5.0)) == rows.length)
+    assert(n(clusterDuration = (fixation, 5.0)) == 0)
+    assert(n(clusterDuration = (0.2, fixation)) == 0)
+  }
+
+  test("kernel == composition: unmet minClusters gives an empty frame") {
+    val (rows, ticks) = session(new Random(7))
+    val all = MarkerParsing.filterAndCluster(frame(rows), clockOf(ticks))
+    assert(assertEquivalent(frame(rows), clockOf(ticks), minClusters = 9) == 0)
+    val empty = MarkerParsing.filterAndCluster(frame(rows), clockOf(ticks),
+      minClusters = 9)
+    assert(empty.schema == all.schema && empty.count() == 0)
+    assert(assertEquivalent(frame(rows), clockOf(ticks), minClusters = 8) == rows.length)
+  }
+
+  test("kernel == composition: randomized planted sessions with every noise mode") {
+    for (seed <- 11 to 16) {
+      val rng = new Random(seed)
+      val (rows, ticks) = session(rng, epochs = 2 + seed % 2)
+      val drifted = rows.map(r =>
+        if (rng.nextDouble() < 0.05) Row(r.getDouble(0) + 4e-9, r.get(1), r.get(2)) else r)
+      val dups = rng.shuffle(rows).take(20)
+      val brief = (0 until 6).map { _ =>
+        val t0 = ticks(rng.nextInt(ticks.length - 10))
+        Row(t0, Seq(rng.nextDouble(), rng.nextDouble()), Seq(0.004, 0.004))
+      }.filterNot(r => rows.exists(_.getDouble(0) == r.getDouble(0)))
+      val oblique = (0 until hz.toInt).map(f =>
+        Row(ticks(f + (50 * hz).toInt), Seq(0.9, 0.9), Seq(0.06, 0.0375)))
+      val markers = rng.shuffle(drifted ++ dups ++ brief ++ oblique)
+      val clock = rng.shuffle(ticks ++ ticks.take(40)) // unsorted, duplicated
+      assert(assertEquivalent(frame(markers), clockOf(clock),
+        clusterDuration = (0.5, 5.0)) > 0, s"seed $seed")
+    }
+  }
+
+  /** `body`'s result and the Spark jobs it submits, counted by a
+    * SparkListener; a flush job afterwards drains the (asynchronous,
+    * ordered) listener bus. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${System.nanoTime}"
+    val jobs = new AtomicInteger
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(g) if g == s"$group-flush" => flushed.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val result = body
+      sc.setJobGroup(s"$group-flush", "flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+      (result, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("filterAndCluster plan guard: at most 4 jobs, no keyless window") {
+    val (rows, ticks) = session(new Random(8))
+    // building the frame counts too: a plan-time count() or persist is a job
+    val (out, jobs) = jobsOf {
+      val out = MarkerParsing.filterAndCluster(frame(rows), clockOf(ticks))
+      assert(out.count() == rows.length)
+      out
+    }
+    assert(jobs <= 4, s"filterAndCluster(...).count() ran $jobs Spark jobs")
+    out.collect()
+    val keyless = new AdaptiveSparkPlanHelper {}.collect(out.queryExecution.executedPlan) {
+      case w: WindowExec if w.partitionSpec.isEmpty => w
+    }
+    assert(keyless.isEmpty, s"keyless window in:\n${out.queryExecution.executedPlan}")
   }
 }

@@ -42,6 +42,20 @@ class PipelineSpec extends SparkSpec {
       r2("mid").error.contains("failed sentinel"))
   }
 
+  test("fatal stage errors propagate without a sentinel; non-fatal ones fail") {
+    def throwing(e: Throwable) = Seq(Stage("boom", Nil, (_, _) => throw e))
+    val root = Files.createTempDirectory("pipe").toString
+    val failed = java.nio.file.Paths.get(
+      s"$root/boom__${Pipeline.tagHash(Map.empty)}", "_FAILED")
+    intercept[InterruptedException] {
+      Pipeline.run(spark, root, throwing(new InterruptedException("stop")))
+    }
+    assert(!Files.exists(failed), "an interrupt must not leave a _FAILED sentinel")
+    val r = Pipeline.run(spark, root, throwing(new RuntimeException("bad input")))
+    assert(r("boom").state == Failed && r("boom").error.contains("bad input"))
+    assert(Files.exists(failed))
+  }
+
   test("different tags → different memoization namespaces") {
     val root = Files.createTempDirectory("pipe").toString
     val a = Pipeline.run(spark, root, stages(false), Map("conf" -> "a"))
