@@ -674,7 +674,7 @@ object Queries {
     * outside the anchor hull by construction, so the exclusion
     * machinery is exercised, not vacuous). The per-session error
     * summaries come from the DISTRIBUTED [[graft.model.ErrorMap
-    * .summaryBySession]] (cogroup per session — no driver loop), with
+    * .summaryBySession]] (one task per session — no driver loop), with
     * `outlierStds = None` so error-row presence is the closed-form
     * `kept-clusters ≥ 4` condition the oracle can state. */
   def qcSessionReport(s: SparkSession, dir: String): DataFrame = {
@@ -699,9 +699,9 @@ object Queries {
   }
 
   /** Core QC-report composition over pre-built streams — every stage
-    * keyed by session (groupBys, SessionCalibrator cogroups,
-    * ErrorMap.summaryBySession cogroup, left joins), so the session
-    * axis scales by ADDING PARTITIONS; `tools/Qc100x` stands exactly
+    * keyed by session (groupBys, SessionCalibrator cogroups, the
+    * session-keyed ErrorMap.summaryBySession kernel, left joins), so the
+    * session axis scales by ADDING PARTITIONS; `tools/Qc100x` stands exactly
     * this lineage at 10⁴ planted sessions with the no-funnel plan laws
     * asserted. Inputs: markers (session, timestamp, norm_x, norm_y,
     * marker_cluster_index), per-eye pupil streams (session, timestamp,

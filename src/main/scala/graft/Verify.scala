@@ -2,6 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -66,8 +67,13 @@ object Verify {
           }
         }
       }
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      catch { case NonFatal(e) =>
+        // the class and the engine frame name the failure even when the
+        // message is null (an NPE's is)
+        val site = e.getStackTrace.find(_.getClassName.startsWith("graft."))
+          .fold("")(f => s" at $f")
+        System.err.println(s"[verify] $name failed: ${e.getClass.getName}: " +
+          s"${e.getMessage}$site")
       }
       // operator-scoped caches die with their query (SCALE.md pitfall 4)
       CacheRegistry.releaseAll()

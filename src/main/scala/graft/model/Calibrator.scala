@@ -51,7 +51,7 @@ object Calibrator {
     // applies to the MATCHED rows (calibration.py:555-560). The
     // windowed-median variant (marker_parsing.py:554-556) sits in a branch
     // that raises NotImplementedError and is deliberately not used here.
-    // Same J2 union-sort idiom as ErrorMap.compute.
+    // J2 union-sort idiom of AsOfJoin.nearest.
     val matched = AsOfJoin.nearest(
         markers,
         pupils.select(col("timestamp"), col("norm_x").as("pnx"),

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** 100× standing for the SESSION QC REPORT lineage
   * ([[graft.Queries.qcReportFrom]]) — the r16 verdict's directive #3:
   * the report composes `SessionCalibrator` fits + `ErrorMap
-  * .summaryBySession` cogroups + four session-keyed stat aggregations
-  * into ONE output frame, exactly the multi-session fan-out that must
+  * .summaryBySession` session-keyed kernels + four session-keyed stat
+  * aggregations into ONE output frame, exactly the multi-session fan-out that must
   * not funnel at fleet scale (reference: plot_session_qc over a whole
   * recording corpus, visualization.py:713-726, 804ff).
   *

@@ -85,6 +85,22 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  test("m9_binocular error step: one keyed kernel, no window") {
+    // ErrorMap.compute fits while the query is built, so its plans are
+    // among those run then (the binocular fit before it keeps its keyless
+    // as-of windows); they are the ones reading ErrorMap's tagged frame
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val (df, _, plans) = traced(Queries.binocularPipeline(spark, dir))
+    val errorPlans = plans.filter(p =>
+      helper.find(p)(_.output.exists(_.name == graft.model.ErrorMap.SideCol)).isDefined)
+    assert(errorPlans.nonEmpty, "m9_binocular ran no ErrorMap kernel while building")
+    for (p <- errorPlans) assert(helper.collect(p) {
+      case w: org.apache.spark.sql.execution.window.WindowExec => w }.isEmpty,
+      s"window in the m9_binocular error step:\n$p")
+    assert(df.collect().head.getAs[Boolean]("err_weighted_ok"))
+    graft.CacheRegistry.releaseAll()
+  }
+
   test("m9 model table broadcasts at bench session counts (size-gated hint)") {
     val p = plan(Queries.multiSessionPipeline(spark, dir))
     assert(p.contains("BroadcastHashJoin"),

@@ -1,12 +1,8 @@
 package graft.operators
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
 import scala.util.Random
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.window.WindowExec
@@ -366,40 +362,10 @@ class MarkerParsingSpec extends SparkSpec {
     }
   }
 
-  /** `body`'s result and the Spark jobs it submits, counted by a
-    * SparkListener; a flush job afterwards drains the (asynchronous,
-    * ordered) listener bus. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"jobs-${System.nanoTime}"
-    val jobs = new AtomicInteger
-    val flushed = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(g) if g == s"$group-flush" => flushed.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      val result = body
-      sc.setJobGroup(s"$group-flush", "flush")
-      sc.parallelize(Seq(1), 1).count()
-      assert(flushed.await(60, TimeUnit.SECONDS), "listener bus did not drain")
-      (result, jobs.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("filterAndCluster plan guard: at most 4 jobs, no keyless window") {
     val (rows, ticks) = session(new Random(8))
     // building the frame counts too: a plan-time count() or persist is a job
-    val (out, jobs) = jobsOf {
+    val (out, jobs, _) = traced {
       val out = MarkerParsing.filterAndCluster(frame(rows), clockOf(ticks))
       assert(out.count() == rows.length)
       out
